@@ -39,6 +39,7 @@ executor loss must not kill the job.
 from __future__ import annotations
 
 import os
+import threading
 from typing import Callable
 
 from pyspark import StorageLevel
@@ -69,6 +70,10 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
 # groups regardless of input rows — map-side partial aggregation
 # bounds what reaches it).
 _TINY_PARTITIONS = os.environ.get("SPARK_GRAFT_TINY_PIN_PARTITIONS", "8")
+# held across the mutate/compile/restore window: the confs are
+# session-global, so two threads pinning at once would each restore
+# the other's clamped values
+_TINY_CONF_LOCK = threading.Lock()
 
 
 def lazy_checkpoint_tiny(df: DataFrame) -> DataFrame:
@@ -82,20 +87,24 @@ def lazy_checkpoint_tiny(df: DataFrame) -> DataFrame:
     scale-correct by construction: partial aggregation means at most
     #groups rows per map task reach these exchanges, independent of
     corpus size. SPARK_GRAFT_TINY_PIN_PARTITIONS overrides the clamp
-    (e.g. for thousands-of-lists per-list codebooks)."""
+    (e.g. for thousands-of-lists per-list codebooks). A non-numeric
+    partition count (session or override) falls back to the plain
+    ``lazy_checkpoint``, leaving every conf untouched."""
     spark = df.sparkSession
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(old_sp), int(_TINY_PARTITIONS))),
-    )
-    try:
-        return df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    with _TINY_CONF_LOCK:
+        old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        old_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
+        try:
+            tiny = min(int(old_sp), int(_TINY_PARTITIONS))
+        except ValueError:
+            return lazy_checkpoint(df)
+        try:
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            spark.conf.set("spark.sql.shuffle.partitions", str(tiny))
+            return df.localCheckpoint(eager=False)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 def disk_persist(df: DataFrame) -> DataFrame:

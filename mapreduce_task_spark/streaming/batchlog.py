@@ -27,6 +27,30 @@ At 100 TB the listing in ``batch_ids`` stays metadata-sized: one id
 per micro-batch or compaction, read from partition directory names
 (never the data), and compaction exists precisely to keep that count
 bounded.
+
+Delta-index families. Each streaming index module (``ivf_ingest``,
+``ivfpq_ingest``, ``ivfsq_ingest``, ``sq_ingest``) is one map ->
+append -> fold dataflow over logs under its index path, and provides
+only what differs between families:
+
+- encode: ``append_batch`` turns a batch into delta rows under the
+  index's frozen quantizer, plus one row of additive sums per monitor;
+- score: ``search_with_delta`` ranks base and delta candidates;
+- merge targets: which base datasets ``merge_delta_into_base``
+  rewrites (``vectors`` only when the index meta's ``store_vectors``
+  allows);
+- monitor columns: the sums of its drift (``n``, ``sum_assign_d``[,
+  ``sum_quant_err``]) or saturation (``n``, ``n_components``,
+  ``n_clamped``) row;
+- ``LOGS``: the log names under the index path its sink writes.
+
+Everything else is written once here: the ``foreachBatch`` attach
+(``attach_batch_sink``), delta compaction and segment merge
+(``compact_delta``, ``merge_delta_into_base``), and the monitor
+trend/signal/compaction/reset functions, which the family modules
+re-export. ``streaming.families`` maps an index meta's ``kind`` to its
+module for the callers that loop over families (``crawl``,
+``retrain``).
 """
 
 from __future__ import annotations
@@ -36,6 +60,19 @@ from pyspark.sql import DataFrame, functions as F
 BATCH_COL = "__batch"
 
 
+def hadoop_path(spark, path: str):
+    """(FileSystem, Path) Hadoop handles for ``path`` — protocol files
+    go through the Hadoop API so they work on any Spark storage."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def path_exists(spark, path: str) -> bool:
+    """True iff ``path`` exists (file or directory)."""
+    fs, p = hadoop_path(spark, path)
+    return bool(fs.exists(p))
+
+
 def log_exists(spark, path: str) -> bool:
     """True iff the log has at least one ``__batch=`` partition to
     read. A bare directory with only ``_SUCCESS`` is NOT readable — a
@@ -43,9 +80,7 @@ def log_exists(spark, path: str) -> bool:
     batch whose survivors were all NULL-text writes an empty digest
     delta), and ``spark.read.parquet`` would fail schema inference on
     it; state readers must treat it as "no history yet"."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_path(spark, path)
     if not fs.exists(p):
         return False
     return any(
@@ -114,11 +149,10 @@ def read_small_file(spark, path: str) -> str | None:
     The writer side (``write_small_file``) commits via temp+rename, so
     an existing file is never partial; an unreadable/empty existing
     file is an invariant violation and raises."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_path(spark, path)
     if not fs.exists(p):
         return None
+    jvm = spark._jvm
     reader = jvm.java.io.BufferedReader(
         jvm.java.io.InputStreamReader(fs.open(p))
     )
@@ -144,11 +178,8 @@ def write_small_file(spark, path: str, content: str) -> None:
     umbrella must not rely on read-availability across the swap.
     Delete/rename failures raise (Hadoop reports most by returning
     false)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    tmp = hpath(path + "._tmp")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_path(spark, path)
+    tmp = p.suffix("._tmp")
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(content.encode()))
@@ -179,8 +210,8 @@ def max_folded_id(ids: list[int]) -> int:
 # stop-stream -> merge in ANOTHER process -> restart-stream in this
 # same long-lived process: the restarted stream would trust a stale
 # pre-merge value and re-write already-folded replayed batches. Hence
-# ``invalidate_watermark_cache``: every streaming attach wrapper pops
-# the key at (re)start, so the first write of each stream incarnation
+# ``invalidate_watermark_cache``: ``attach_batch_sink`` pops every
+# log's key at (re)start, so the first write of each stream incarnation
 # re-reads the file. Keyed by watermark path.
 _WM_CACHE: dict[str, int] = {}
 
@@ -188,14 +219,37 @@ _WM_CACHE: dict[str, int] = {}
 def invalidate_watermark_cache(path: str) -> None:
     """Drop the cached merged watermark for log ``path``, forcing the
     next consult to re-read the watermark file. MUST be called when an
-    ingest stream (re)starts in a long-lived process (the streaming_*
-    attach wrappers do) — a segment merge run in a different process
-    while this one's stream was merely stopped would otherwise leave
+    ingest stream (re)starts in a long-lived process
+    (``attach_batch_sink`` does) — a segment merge run in a different
+    process while this one's stream was merely stopped would otherwise leave
     this process trusting a stale pre-merge value, re-writing replayed
     folded batches and double-counting their rows in every delta
     read. Callers wiring ``append_*``/``write_batch_partition`` into
     their own foreachBatch must call this at stream start themselves."""
     _WM_CACHE.pop(_watermark_path(path), None)
+
+
+def attach_batch_sink(stream_df: DataFrame, checkpoint: str, logs, append):
+    """Start ``append(batch_df, batch_id)`` as the stream's
+    ``foreachBatch`` sink under ``checkpoint`` (trigger
+    ``availableNow``); returns the StreamingQuery. First drops the
+    cached merged watermark of every path in ``logs`` (see
+    ``invalidate_watermark_cache``); empty micro-batches write
+    nothing."""
+    for log in logs:
+        invalidate_watermark_cache(log)
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        append(batch_df, batch_id)
+
+    return (
+        stream_df.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def merged_watermark(spark, path: str) -> int:
@@ -270,10 +324,10 @@ def write_batch_partition(
             stacklevel=2,
         )
         return
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.withColumn(BATCH_COL, F.lit(int(batch_id)))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BATCH_COL, *sub_partition_cols)
         .parquet(path)
     )
@@ -322,10 +376,7 @@ def compact_log(
     # into a fresh negative partition the merge recovery cannot see,
     # and the NEXT merge would fold them into the base a second time
     # (duplicate index rows). Refuse until the merge is finished.
-    jvm = spark._jvm
-    marker_p = jvm.org.apache.hadoop.fs.Path(f"{path}_merge_marker")
-    mfs = marker_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if mfs.exists(marker_p):
+    if path_exists(spark, f"{path}_merge_marker"):
         raise RuntimeError(
             f"crashed segment merge pending at {path}_merge_marker — "
             "re-run merge_delta_into_base to finish recovery before "
@@ -342,7 +393,6 @@ def compact_log(
         b for b in ids if (0 <= b <= effective) or (b < 0 and b != target)
     ]
     if effective > covered:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         merged = (
             fold(
                 live_view(log, covered).filter(
@@ -355,9 +405,9 @@ def compact_log(
             # path the fold reads from
             .localCheckpoint()
         )
-        merged.write.mode("overwrite").partitionBy(
-            BATCH_COL, *sub_partition_cols
-        ).parquet(path)
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(BATCH_COL, *sub_partition_cols).parquet(path)
     elif not superseded:
         return 0
     return drop_partitions(spark, path, superseded)
@@ -373,13 +423,9 @@ def drop_partitions(spark, path: str, ids: list[int]) -> int:
     FALSE, so a false return raises; the caller's marker (or a
     compaction retry) resumes. Returns how many existed and were
     dropped."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
     dropped = 0
     for b in ids:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{BATCH_COL}={b}")
+        fs, p = hadoop_path(spark, f"{path}/{BATCH_COL}={b}")
         if fs.exists(p):
             if not fs.delete(p, True):
                 raise RuntimeError(
@@ -400,12 +446,9 @@ def swap_merged_into_base(spark, index_path: str, names) -> None:
     survives, so a re-run resumes this exact swap. Shared by
     ``merge_log_into_base`` and the bm25 three-log merge so the
     crash-protocol swap step cannot drift between them."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(index_path).getFileSystem(spark._jsc.hadoopConfiguration())
     for name in names:
-        tmp_p = hpath(f"{index_path}/{name}_merged")
-        final_p = hpath(f"{index_path}/{name}")
+        fs, final_p = hadoop_path(spark, f"{index_path}/{name}")
+        tmp_p = final_p.suffix("_merged")
         if fs.exists(tmp_p):
             if fs.exists(final_p) and not fs.delete(final_p, True):
                 raise RuntimeError(
@@ -424,18 +467,10 @@ def remove_log_dir_if_empty(spark, log_path: str) -> None:
     remains (pure cleanup — an empty dir is already 'no history' to
     ``log_exists``). A FALSE delete raises like every other protocol
     step."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(log_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        leftover = any(
-            s.getPath().getName().startswith(f"{BATCH_COL}=")
-            for s in fs.listStatus(p)
-        )
-        if not leftover and not fs.delete(p, True):
-            raise RuntimeError(
-                f"could not remove empty delta log {log_path}"
-            )
+    fs, p = hadoop_path(spark, log_path)
+    if fs.exists(p) and not log_exists(spark, log_path):
+        if not fs.delete(p, True):
+            raise RuntimeError(f"could not remove empty delta log {log_path}")
 
 
 def merge_log_into_base(
@@ -487,12 +522,9 @@ def merge_log_into_base(
     count (0 for resume/no-op)."""
     import json
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(index_path).getFileSystem(spark._jsc.hadoopConfiguration())
     log_path = f"{index_path}/{log_subdir}"
     marker = f"{index_path}/{log_subdir}_merge_marker"
-    marker_p = hpath(marker)
+    fs, marker_p = hadoop_path(spark, marker)
 
     def marker_ids() -> list | None:
         """The committed merge's batch ids, or None when no marker is
@@ -509,7 +541,7 @@ def merge_log_into_base(
         if not fs.exists(marker_p):
             return None
         if fs.getFileStatus(marker_p).isDirectory():
-            if not fs.exists(hpath(f"{marker}/_SUCCESS")):
+            if not path_exists(spark, f"{marker}/_SUCCESS"):
                 # No _SUCCESS: EITHER a torn legacy write OR a
                 # completed one under a committer configured with
                 # marksuccessfuljobs=false. Distinguish by CONTENT
@@ -566,7 +598,7 @@ def merge_log_into_base(
         # dir can only coexist with a missing log while the marker
         # exists, handled above). Finish the legacy swap.
         if any(
-            fs.exists(hpath(f"{index_path}/{name}_merged")) for name in targets
+            path_exists(spark, f"{index_path}/{name}_merged") for name in targets
         ):
             finish([])
         return 0
@@ -579,3 +611,258 @@ def merge_log_into_base(
     write_small_file(spark, marker, json.dumps([int(b) for b in ids]))
     finish(ids)
     return n
+
+
+# ---------------------------------------------------------------------------
+# Shared delta-index maintenance (module docstring, "Delta-index
+# families"). ``<index>/delta`` holds immutable encoded rows,
+# sub-partitioned like the base lists: by ``cluster`` for the IVF
+# families (the default), not at all for flat SQ.
+
+
+def compact_delta(
+    spark,
+    index_path: str,
+    up_to_batch: int,
+    sub_partition_cols: tuple = ("cluster",),
+) -> int:
+    """Fold delta partitions ``__batch <= up_to_batch`` into the
+    negative-id partition by re-selection (the win is a bounded
+    partition/file count). The sink body never reads the delta back,
+    so ``up_to_batch`` need not be checkpoint-committed: a replay just
+    leaves a dead covered directory that readers ignore."""
+    return compact_log(
+        spark,
+        f"{index_path}/delta",
+        up_to_batch,
+        lambda live: live.drop(BATCH_COL),
+        sub_partition_cols=sub_partition_cols,
+    )
+
+
+def merge_delta_into_base(
+    spark,
+    index_path: str,
+    targets: tuple = ("codes", "vectors"),
+    sub_partition_cols: tuple = ("cluster",),
+) -> int:
+    """The offline segment merge on the ``merge_log_into_base``
+    protocol: rewrite each base dataset in ``targets`` as base ∪ delta
+    live view (each base keeps its own column subset of the delta
+    rows) and drop the merged delta partitions. ``vectors`` is skipped
+    when the index meta records ``store_vectors=False``. The marker
+    commit is what makes a multi-dataset base safe: after a crash
+    anywhere past it, recovery finishes every swap, so codes and
+    vectors never end half-swapped. Crash recovery is a re-run, safe
+    even if the append stream restarted first; the quantizer stays
+    frozen (a merge is not a retrain). True multi-writer atomicity
+    needs a table format (Delta/Iceberg). Returns the delta rows merged
+    in (0 on a no-op or resume call)."""
+    from ..operators.pq import read_index_meta
+
+    meta = read_index_meta(spark, index_path) or {}
+    if not meta.get("store_vectors", True):
+        targets = tuple(t for t in targets if t != "vectors")
+
+    def write_merged(live: DataFrame, name: str) -> None:
+        base = spark.read.parquet(f"{index_path}/{name}")
+        base.unionByName(live.select(*base.columns)).write.mode(
+            "overwrite"
+        ).partitionBy(*sub_partition_cols).parquet(
+            f"{index_path}/{name}_merged"
+        )
+
+    return merge_log_into_base(
+        spark, index_path, "delta", list(targets), write_merged
+    )
+
+
+def allow_listed(cand: DataFrame, id_col: str, filter_ids) -> DataFrame:
+    """``cand`` restricted to the ``cand_id``s that ``filter_ids`` lists
+    in ``id_col`` — the filtered-search allow-list every family's
+    ``search_with_delta`` applies to base and delta candidates alike
+    before ranking; ``cand`` itself without a filter."""
+    if filter_ids is None:
+        return cand
+    allowed = filter_ids.select(F.col(id_col).alias("cand_id"))
+    return cand.join(allowed, "cand_id", "leftsemi")
+
+
+# ---------------------------------------------------------------------------
+# Mergeable monitors: a frozen quantizer degrades silently as the
+# stream drifts from its training data, so each append lands one row
+# of additive sums per batch — ``<index>/drift`` (n, sum_assign_d[,
+# sum_quant_err]: squared distance to the home centroid, and the PQ
+# reconstruction error) or ``<index>/sat`` (n, n_components,
+# n_clamped: components outside the frozen SQ bounds). Any set of rows
+# merges by column-wise sum (decimal(38,0) where int64 could
+# overflow): per batch for a trend, over all batches for a signal,
+# over folded batches for compaction. Drift is read as ratios of means
+# against the build corpus's own sums in ``drift_base``; the build
+# corpus clamps nothing, so saturation is read against an absolute
+# threshold.
+
+_DRIFT_TERMS = {  # sum column -> (mean column, ratio column)
+    "sum_assign_d": ("mean_assign_d", "assign_ratio"),
+    "sum_quant_err": ("mean_quant_err", "quant_ratio"),
+}
+
+
+def _sums(live: DataFrame) -> list:
+    return [F.sum(c).alias(c) for c in live.columns if c != BATCH_COL]
+
+
+def sum_fold(live: DataFrame) -> DataFrame:
+    """One row: the column-wise sum of every non-batch column — the
+    ``compact_log`` fold of any log of additive counters."""
+    return live.agg(*_sums(live))
+
+
+def _monitor(spark, index_path: str, log: str, by_batch: bool):
+    """The monitor log merged per batch or over every batch; None until
+    a row exists."""
+    live = log_live(spark, f"{index_path}/{log}")
+    if live is None:
+        return None
+    return (live.groupBy(BATCH_COL) if by_batch else live).agg(*_sums(live))
+
+
+def _drift(spark, index_path: str, by_batch: bool):
+    """(merged drift sums beside the baseline means ``__b<sum>``, the
+    drift's sum terms), or (None, []) until a drift row exists."""
+    sums = _monitor(spark, index_path, "drift", by_batch)
+    if sums is None:
+        return None, []
+    terms = [t for t in _DRIFT_TERMS if t in sums.columns]
+    base = spark.read.parquet(f"{index_path}/drift_base").select(
+        *[(F.col(t) / F.col("n")).cast("double").alias(f"__b{t}") for t in terms]
+    )
+    return sums.crossJoin(F.broadcast(base)), terms
+
+
+def _drift_ratios(terms: list) -> list:
+    return [
+        (F.col(t) / F.col("n") / F.col(f"__b{t}"))
+        .cast("double")
+        .alias(_DRIFT_TERMS[t][1])
+        for t in terms
+    ]
+
+
+def _flag(frame: DataFrame, cols: list, threshold: float, name: str):
+    """``frame`` plus boolean ``name``: any of ``cols`` > threshold."""
+    hit = F.col(cols[0]) > F.lit(threshold)
+    for c in cols[1:]:
+        hit = hit | (F.col(c) > F.lit(threshold))
+    return frame.select("*", hit.alias(name))
+
+
+def read_drift_trend(spark, index_path: str) -> DataFrame | None:
+    """Per-batch (__batch, n, mean_assign_d[, mean_quant_err],
+    assign_ratio[, quant_ratio]); None until a drift row exists. ~1.0
+    means the stream matches the build corpus; sustained growth means
+    recall is silently degrading — schedule a retrain
+    (``streaming.retrain``: ``reset_drift`` + a fresh
+    ``drift_baseline``)."""
+    sums, terms = _drift(spark, index_path, by_batch=True)
+    if sums is None:
+        return None
+    means = [
+        (F.col(t) / F.col("n")).cast("double").alias(_DRIFT_TERMS[t][0])
+        for t in terms
+    ]
+    return sums.select(BATCH_COL, "n", *means, *_drift_ratios(terms))
+
+
+def drift_signal(
+    spark, index_path: str, retrain_ratio: float = 1.5
+) -> DataFrame | None:
+    """The retrain trigger over every appended-so-far vector: (n,
+    assign_ratio[, quant_ratio], retrain), ``retrain`` true when any
+    ratio exceeds ``retrain_ratio`` (1.5: half again the build corpus's
+    own error); None until a drift row exists. A pure merge, so the
+    cost is independent of the appended volume.
+
+    Calibration caveat (IVF-PQ ``per_list=True``): ksub centroids per
+    small list nearly memorize the build corpus, so in-distribution
+    appends read quant ratios of ~2-3x (2.68 on the test fixture). Set
+    ``retrain_ratio`` against an in-distribution holdout batch there;
+    the assignment ratio stays near 1 either way."""
+    sums, terms = _drift(spark, index_path, by_batch=False)
+    if sums is None:
+        return None
+    ratios = _drift_ratios(terms)
+    return _flag(
+        sums.select("n", *ratios),
+        [_DRIFT_TERMS[t][1] for t in terms],
+        retrain_ratio,
+        "retrain",
+    )
+
+
+def _frac_clamped():
+    return (
+        (F.col("n_clamped") / F.col("n_components"))
+        .cast("double")
+        .alias("frac_clamped")
+    )
+
+
+def read_saturation_trend(spark, index_path: str) -> DataFrame | None:
+    """Per-batch (__batch, n, frac_clamped); None until a saturation
+    row exists. Growth from 0 means the stream is leaving the fitted
+    bounds — schedule a refit, then ``reset_saturation``."""
+    sums = _monitor(spark, index_path, "sat", by_batch=True)
+    return None if sums is None else sums.select(BATCH_COL, "n", _frac_clamped())
+
+
+def saturation_signal(
+    spark, index_path: str, refit_frac: float = 0.01
+) -> DataFrame | None:
+    """One row over every appended-so-far vector: (n, n_components,
+    n_clamped, frac_clamped, refit), ``refit`` true when more than
+    ``refit_frac`` of the streamed components clamped."""
+    sums = _monitor(spark, index_path, "sat", by_batch=False)
+    if sums is None:
+        return None
+    return _flag(
+        sums.select("*", _frac_clamped()), ["frac_clamped"], refit_frac, "refit"
+    )
+
+
+def compact_monitor(spark, index_path: str, log: str, up_to_batch: int) -> int:
+    """Fold monitor rows ``__batch <= up_to_batch`` of ``<index>/<log>``
+    into the negative-id partition by pure sum; every signal is
+    unchanged. Never read back by a sink body, so ``up_to_batch`` need
+    not be checkpoint-committed."""
+    return compact_log(spark, f"{index_path}/{log}", up_to_batch, sum_fold)
+
+
+def compact_drift(spark, index_path: str, up_to_batch: int) -> int:
+    """``compact_monitor`` on the drift log."""
+    return compact_monitor(spark, index_path, "drift", up_to_batch)
+
+
+def compact_saturation(spark, index_path: str, up_to_batch: int) -> int:
+    """``compact_monitor`` on the saturation log."""
+    return compact_monitor(spark, index_path, "sat", up_to_batch)
+
+
+def _remove(spark, index_path: str, subs: tuple) -> None:
+    for sub in subs:
+        fs, p = hadoop_path(spark, f"{index_path}/{sub}")
+        if fs.exists(p) and not fs.delete(p, True):
+            raise RuntimeError(f"could not remove {index_path}/{sub}")
+    invalidate_watermark_cache(f"{index_path}/{subs[0]}")
+
+
+def reset_drift(spark, index_path: str) -> None:
+    """Drop the drift log and baseline — required after a retrain,
+    before the new ``drift_baseline`` (rows measured under the old
+    quantizer would poison every new ratio)."""
+    _remove(spark, index_path, ("drift", "drift_base"))
+
+
+def reset_saturation(spark, index_path: str) -> None:
+    """Drop the saturation log after a bounds refit."""
+    _remove(spark, index_path, ("sat",))

@@ -44,10 +44,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.ranking import doc_tokens, score_postings
 from .batchlog import (
     BATCH_COL,
+    attach_batch_sink,
     compact_log,
-    invalidate_watermark_cache,
+    hadoop_path,
     log_exists,
     log_live,
+    path_exists,
+    sum_fold,
     write_batch_partition,
 )
 
@@ -101,25 +104,45 @@ def streaming_bm25_append(
     """Attach the append sink to a document stream; returns the
     StreamingQuery. The base index (``bm25_build_index``) must exist
     and carry the exact counters (``n_docs_exact``, ``sum_dl``)."""
-
-    for d in (_POSTINGS, _DF, _STATS):
-        invalidate_watermark_cache(f"{index_path}/{d}")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_text_batch(batch_df, batch_id, index_path, id_col, text_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        [f"{index_path}/{d}" for d in (_POSTINGS, _DF, _STATS)],
+        lambda df, b: append_text_batch(df, b, index_path, id_col, text_col),
     )
 
 
-def _live(spark: SparkSession, path: str) -> DataFrame | None:
-    return log_live(spark, path)
+def _counters(spark: SparkSession, index_path: str) -> DataFrame:
+    """(n, s): the base's exact (n_docs, sum_dl) counters plus every
+    delta batch's."""
+    counters = spark.read.parquet(f"{index_path}/stats").select(
+        F.col("n_docs_exact").alias("n"), F.col("sum_dl").alias("s")
+    )
+    ds = log_live(spark, f"{index_path}/{_STATS}")
+    if ds is not None:
+        counters = counters.unionByName(
+            ds.select(F.col("n_docs").alias("n"), F.col("sum_dl").alias("s"))
+        )
+    return counters
+
+
+def _term_df(
+    spark: SparkSession, index_path: str, terms: list[str] | None = None
+) -> DataFrame:
+    """Per-term df over base ∪ delta (df is additive), restricted to
+    ``terms`` when given."""
+    tdf = spark.read.parquet(f"{index_path}/term_df")
+    ddf = log_live(spark, f"{index_path}/{_DF}")
+    if terms is not None:
+        tdf = tdf.filter(F.col("term").isin(terms))
+    tdf = tdf.select("term", "df")
+    if ddf is not None:
+        if terms is not None:
+            ddf = ddf.filter(F.col("term").isin(terms))
+        tdf = tdf.unionByName(
+            ddf.select("term", F.col("df_delta").cast("double").alias("df"))
+        )
+    return tdf.groupBy("term").agg(F.sum("df").alias("df"))
 
 
 def search_with_delta(
@@ -141,38 +164,15 @@ def search_with_delta(
     allow-list — the ``bm25_search_index(filter_ids=)`` filtered-search
     contract spanning base and streamed-in docs (corpus statistics
     stay corpus-wide, per the standard pre-filter semantics)."""
-    base_stats = spark.read.parquet(f"{index_path}/stats")
-    counters = base_stats.select(
-        F.col("n_docs_exact").alias("n"), F.col("sum_dl").alias("s")
-    )
-    ds = _live(spark, f"{index_path}/{_STATS}")
-    if ds is not None:
-        counters = counters.unionByName(
-            ds.select(F.col("n_docs").alias("n"), F.col("sum_dl").alias("s"))
-        )
-    stats = counters.agg(
+    stats = _counters(spark, index_path).agg(
         F.sum("n").cast("double").alias("n_docs"),
         (F.sum("s").cast("double") / F.sum("n").cast("double")).alias("avgdl"),
     )
-
-    tdf = (
-        spark.read.parquet(f"{index_path}/term_df")
-        .filter(F.col("term").isin(terms))
-        .select("term", "df")
-    )
-    ddf = _live(spark, f"{index_path}/{_DF}")
-    if ddf is not None:
-        tdf = tdf.unionByName(
-            ddf.filter(F.col("term").isin(terms)).select(
-                "term", F.col("df_delta").cast("double").alias("df")
-            )
-        )
-    tdf = tdf.groupBy("term").agg(F.sum("df").alias("df"))
-
+    tdf = _term_df(spark, index_path, terms)
     postings = spark.read.parquet(f"{index_path}/postings").filter(
         F.col("term").isin(terms)
     )
-    dposts = _live(spark, f"{index_path}/{_POSTINGS}")
+    dposts = log_live(spark, f"{index_path}/{_POSTINGS}")
     if dposts is not None:
         postings = postings.unionByName(
             dposts.filter(F.col("term").isin(terms)).select(postings.columns)
@@ -192,10 +192,7 @@ def _refuse_compact_while_merge_pending(spark: SparkSession, index_path: str):
     owns by id into a fresh negative partition it cannot see, leaving
     folded rows alive in the delta — double-counted by every search
     and baked into the base next merge."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_MERGE_COMMITTED")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
+    if path_exists(spark, f"{index_path}/_MERGE_COMMITTED"):
         raise RuntimeError(
             f"crashed bm25 segment merge pending at {index_path}/"
             "_MERGE_COMMITTED — re-run merge_delta_into_base to finish "
@@ -234,15 +231,7 @@ def compact_stats_delta(
 ) -> int:
     """Fold stat counters by sum (both are additive)."""
     _refuse_compact_while_merge_pending(spark, index_path)
-    return compact_log(
-        spark,
-        f"{index_path}/{_STATS}",
-        up_to_batch,
-        lambda live: live.agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("sum_dl").alias("sum_dl"),
-        ),
-    )
+    return compact_log(spark, f"{index_path}/{_STATS}", up_to_batch, sum_fold)
 
 
 def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
@@ -296,11 +285,8 @@ def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
         write_small_file,
     )
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(index_path).getFileSystem(spark._jsc.hadoopConfiguration())
     marker_path = f"{index_path}/_MERGE_COMMITTED"
-    marker = hpath(marker_path)
+    fs, marker = hadoop_path(spark, marker_path)
     names = ("postings", "term_df", "stats")
     deltas = (_POSTINGS, _DF, _STATS)
 
@@ -381,7 +367,7 @@ def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
             else -1
         )
 
-    dposts = _live(spark, f"{index_path}/{_POSTINGS}")
+    dposts = log_live(spark, f"{index_path}/{_POSTINGS}")
     n = dposts.count() if dposts is not None else 0
 
     base_posts = spark.read.parquet(f"{index_path}/postings")
@@ -394,26 +380,10 @@ def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
         "overwrite"
     ).parquet(f"{index_path}/postings_merged")
 
-    tdf = spark.read.parquet(f"{index_path}/term_df")
-    ddf = _live(spark, f"{index_path}/{_DF}")
-    if ddf is not None:
-        tdf = tdf.unionByName(
-            ddf.select("term", F.col("df_delta").cast("double").alias("df"))
-        )
-    tdf.groupBy("term").agg(F.sum("df").alias("df")).write.mode("overwrite").parquet(
+    _term_df(spark, index_path).write.mode("overwrite").parquet(
         f"{index_path}/term_df_merged"
     )
-
-    base_stats = spark.read.parquet(f"{index_path}/stats")
-    counters = base_stats.select(
-        F.col("n_docs_exact").alias("n"), F.col("sum_dl").alias("s")
-    )
-    ds = _live(spark, f"{index_path}/{_STATS}")
-    if ds is not None:
-        counters = counters.unionByName(
-            ds.select(F.col("n_docs").alias("n"), F.col("sum_dl").alias("s"))
-        )
-    counters.agg(
+    _counters(spark, index_path).agg(
         F.sum("n").cast("double").alias("n_docs"),
         (F.sum("s").cast("double") / F.sum("n").cast("double")).alias("avgdl"),
         F.sum("n").alias("n_docs_exact"),

@@ -52,11 +52,38 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .batchlog import invalidate_watermark_cache, write_batch_partition
-from .bm25_ingest import _DF, _POSTINGS, _STATS, append_text_batch
-from .dedup_ingest import ingest_batch_neardup
-from .ivf_ingest import append_batch as ivf_append_batch
-from .quality_monitor import batch_quality_row
+from .batchlog import (
+    attach_batch_sink,
+    compact_monitor,
+    drift_signal,
+    log_exists,
+    path_exists,
+    saturation_signal,
+    write_batch_partition,
+)
+from .bm25_ingest import (
+    _DF,
+    _POSTINGS,
+    _STATS,
+    append_text_batch,
+    compact_df_delta,
+    compact_postings_delta,
+    compact_stats_delta,
+)
+from .dedup_ingest import compact_corpus, compact_signatures, ingest_batch_neardup
+from .families import FAMILIES
+from .quality_monitor import batch_quality_row, compact_quality
+
+
+def _ann_legs(ivf_path, ivfpq_path, ivfsq_path) -> list:
+    """(kind, family module, index path) per ANN index given, in
+    family-table order."""
+    paths = {"ivf": ivf_path, "ivfpq": ivfpq_path, "ivfsq": ivfsq_path}
+    return [
+        (kind, mod, paths[kind])
+        for kind, mod in FAMILIES.items()
+        if paths[kind] is not None
+    ]
 
 
 def crawl_batch(
@@ -76,23 +103,19 @@ def crawl_batch(
     seed_path: str | None = None,
     quality_model=None,
     quality_threshold: float = 0.5,
-    ivfpq_m: int = 8,
-    ivfpq_dim: int = 64,
-    ivfpq_per_list: bool = False,
 ) -> DataFrame:
     """Run one (micro-)batch through the full crawl loop; returns the
     survivor frame. Usable directly for batch backfills and as the
-    foreachBatch body. The BM25/IVF/IVF-PQ base indexes must already
+    foreachBatch body. The BM25 and ANN base indexes must already
     exist (``bm25_build_index`` / ``ivf_build_index`` /
-    ``ivfpq_build_index`` — over the seed corpus, or over an empty
-    frame for a cold start). ``ivfpq_path`` appends survivors to the
-    COMPRESSED index's delta (frozen coarse quantizer + codebook, see
-    ``ivfpq_ingest``); ``ivfpq_m``/``ivfpq_dim``/``ivfpq_per_list``
-    must ALL match its build (a per-list index encoded through the
-    global-codebook path would write silently wrong codes).
-    Both ANN legs may run side by side — a deployment typically keeps
-    one, but the replay argument is identical (each append is
-    deterministic in batch rows + frozen index).
+    ``ivfpq_build_index`` / ``ivfsq_build_index`` — over the seed
+    corpus, or over an empty frame for a cold start). Each ANN leg
+    encodes survivors under its index's frozen quantizer, with the
+    shape each index records in its own meta (see
+    ``streaming.families``). The ANN legs may run side by side — a
+    deployment typically keeps one, but the replay argument is
+    identical (each append is deterministic in batch rows + frozen
+    index).
 
     ``quality_model`` (a fitted ``quality_model.train_quality_model``
     PipelineModel) inserts the learned-filter stage: the monitor row
@@ -134,39 +157,15 @@ def crawl_batch(
     )
     if bm25_path is not None:
         append_text_batch(fresh, batch_id, bm25_path, id_col, text_col)
-    if ivf_path is not None and vec_col in fresh.columns:
-        ivf_append_batch(
-            fresh.where(F.col(vec_col).isNotNull()),
-            batch_id,
-            ivf_path,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-    if ivfpq_path is not None and vec_col in fresh.columns:
-        from .ivfpq_ingest import append_batch as ivfpq_append_batch
-
-        ivfpq_append_batch(
-            fresh.where(F.col(vec_col).isNotNull()),
-            batch_id,
-            ivfpq_path,
-            id_col=id_col,
-            vec_col=vec_col,
-            m=ivfpq_m,
-            dim=ivfpq_dim,
-            per_list=ivfpq_per_list,
-        )
-    if ivfsq_path is not None and vec_col in fresh.columns:
-        from .ivfsq_ingest import append_batch as ivfsq_append_batch
-
-        # shape/metric/per_list come from the index's own meta — the
-        # SQ delta encode has no caller-supplied knobs to mismatch
-        ivfsq_append_batch(
-            fresh.where(F.col(vec_col).isNotNull()),
-            batch_id,
-            ivfsq_path,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
+    if vec_col in fresh.columns:
+        for _, mod, path in _ann_legs(ivf_path, ivfpq_path, ivfsq_path):
+            mod.append_batch(
+                fresh.where(F.col(vec_col).isNotNull()),
+                batch_id,
+                path,
+                id_col,
+                vec_col,
+            )
     return fresh
 
 
@@ -187,9 +186,6 @@ def streaming_crawl_ingest(
     seed_path: str | None = None,
     quality_model=None,
     quality_threshold: float = 0.5,
-    ivfpq_m: int = 8,
-    ivfpq_dim: int = 64,
-    ivfpq_per_list: bool = False,
 ):
     """Attach the composed crawl sink to a document stream; returns
     the StreamingQuery. One checkpoint governs the whole fan-out (see
@@ -197,54 +193,25 @@ def streaming_crawl_ingest(
     ``quality_model`` adds the learned-filter stage (see
     ``crawl_batch``); the fitted PipelineModel is captured in the sink
     closure and reused across micro-batches."""
-    for log in [
-        corpus_path,
-        sig_path,
-        quality_path,
-        *(
-            [f"{bm25_path}/{d}" for d in (_POSTINGS, _DF, _STATS)]
-            if bm25_path is not None
-            else []
-        ),
-        *(
-            [f"{ivf_path}/delta", f"{ivf_path}/drift"]
-            if ivf_path is not None
-            else []
-        ),
-        *(
-            [f"{ivfpq_path}/delta", f"{ivfpq_path}/drift"]
-            if ivfpq_path is not None
-            else []
-        ),
-        *(
-            [f"{ivfsq_path}/delta", f"{ivfsq_path}/drift", f"{ivfsq_path}/sat"]
-            if ivfsq_path is not None
-            else []
-        ),
-    ]:
-        if log is not None:
-            invalidate_watermark_cache(log)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        crawl_batch(
-            batch_df, batch_id, corpus_path, sig_path,
+    logs = [corpus_path, sig_path]
+    if quality_path is not None:
+        logs.append(quality_path)
+    if bm25_path is not None:
+        logs += [f"{bm25_path}/{d}" for d in (_POSTINGS, _DF, _STATS)]
+    for _, mod, path in _ann_legs(ivf_path, ivfpq_path, ivfsq_path):
+        logs += [f"{path}/{log}" for log in mod.LOGS]
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        logs,
+        lambda df, b: crawl_batch(
+            df, b, corpus_path, sig_path,
             bm25_path=bm25_path, ivf_path=ivf_path, ivfpq_path=ivfpq_path,
-            ivfsq_path=ivfsq_path,
-            quality_path=quality_path,
+            ivfsq_path=ivfsq_path, quality_path=quality_path,
             id_col=id_col, text_col=text_col, vec_col=vec_col,
             threshold=threshold, seed_path=seed_path,
             quality_model=quality_model, quality_threshold=quality_threshold,
-            ivfpq_m=ivfpq_m, ivfpq_dim=ivfpq_dim,
-            ivfpq_per_list=ivfpq_per_list,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -291,16 +258,6 @@ def compact_crawl(
     offline index merges (``bm25_ingest.merge_delta_into_base``,
     ``ivf_ingest.merge_delta_into_base``) remain separate,
     stream-stopped operations."""
-    from .batchlog import log_exists
-    from .bm25_ingest import (
-        compact_df_delta,
-        compact_postings_delta,
-        compact_stats_delta,
-    )
-    from .dedup_ingest import compact_corpus, compact_signatures
-    from .ivf_ingest import compact_delta as compact_ivf_delta
-    from .quality_monitor import compact_quality
-
     done: dict[str, int] = {}
 
     def run(name: str, path: str | None, fn) -> None:
@@ -319,32 +276,12 @@ def compact_crawl(
             lambda: compact_df_delta(spark, bm25_path, committed_batch))
         run("bm25_stats", f"{bm25_path}/delta_stats",
             lambda: compact_stats_delta(spark, bm25_path, committed_batch))
-    if ivf_path is not None:
-        from .ivf_ingest import compact_drift as compact_ivf_drift
-
-        run("ivf_delta", f"{ivf_path}/delta",
-            lambda: compact_ivf_delta(spark, ivf_path, committed_batch))
-        run("ivf_drift", f"{ivf_path}/drift",
-            lambda: compact_ivf_drift(spark, ivf_path, committed_batch))
-    if ivfpq_path is not None:
-        from .ivfpq_ingest import compact_delta as compact_ivfpq_delta
-        from .ivfpq_ingest import compact_drift as compact_ivfpq_drift
-
-        run("ivfpq_delta", f"{ivfpq_path}/delta",
-            lambda: compact_ivfpq_delta(spark, ivfpq_path, committed_batch))
-        run("ivfpq_drift", f"{ivfpq_path}/drift",
-            lambda: compact_ivfpq_drift(spark, ivfpq_path, committed_batch))
-    if ivfsq_path is not None:
-        from .ivfsq_ingest import compact_delta as compact_ivfsq_delta
-        from .ivfsq_ingest import compact_drift as compact_ivfsq_drift
-        from .ivfsq_ingest import compact_saturation as compact_ivfsq_sat
-
-        run("ivfsq_delta", f"{ivfsq_path}/delta",
-            lambda: compact_ivfsq_delta(spark, ivfsq_path, committed_batch))
-        run("ivfsq_drift", f"{ivfsq_path}/drift",
-            lambda: compact_ivfsq_drift(spark, ivfsq_path, committed_batch))
-        run("ivfsq_sat", f"{ivfsq_path}/sat",
-            lambda: compact_ivfsq_sat(spark, ivfsq_path, committed_batch))
+    for kind, mod, path in _ann_legs(ivf_path, ivfpq_path, ivfsq_path):
+        for log in mod.LOGS:
+            run(f"{kind}_{log}", f"{path}/{log}",
+                lambda: mod.compact_delta(spark, path, committed_batch)
+                if log == "delta"
+                else compact_monitor(spark, path, log, committed_batch))
     run("quality", quality_path,
         lambda: compact_quality(spark, quality_path, committed_batch))
     for root in retrain_roots:
@@ -356,13 +293,6 @@ def compact_crawl(
         )
         done[f"retrain:{root}"] = res.get("epoch", 0) if res["due"] else 0
     return done
-
-
-def _path_exists(spark, path: str) -> bool:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
 
 
 def crawl_health(
@@ -393,25 +323,15 @@ def crawl_health(
     merges of the mergeable monitor rows per index — safe on a
     schedule against a 100 TB deployment."""
     from ..operators.pq import index_health
-    from . import ivf_ingest, ivfpq_ingest, ivfsq_ingest
-    from .batchlog import log_exists
 
     frames = []
-    for path, mod in (
-        (ivf_path, ivf_ingest),
-        (ivfpq_path, ivfpq_ingest),
-        (ivfsq_path, ivfsq_ingest),
-    ):
-        if path is None:
-            continue
+    for _, _, path in _ann_legs(ivf_path, ivfpq_path, ivfsq_path):
         h = index_health(spark, path).select(
             F.lit(path).alias("index_path"), "*"
         )
         sig = None
-        if log_exists(spark, f"{path}/drift") and _path_exists(
-            spark, f"{path}/drift_base"
-        ):
-            sig = mod.drift_signal(spark, path, retrain_ratio)
+        if path_exists(spark, f"{path}/drift_base"):
+            sig = drift_signal(spark, path, retrain_ratio)
         if sig is None:
             sig = spark.range(1).select(
                 F.lit(None).cast("bigint").alias("drift_n"),
@@ -431,9 +351,7 @@ def crawl_health(
                 ).alias("quant_ratio"),
                 F.col("retrain"),
             )
-        sat = None
-        if mod is ivfsq_ingest and log_exists(spark, f"{path}/sat"):
-            sat = ivfsq_ingest.saturation_signal(spark, path, refit_frac)
+        sat = saturation_signal(spark, path, refit_frac)
         if sat is None:
             sat = spark.range(1).select(
                 F.lit(None).cast("double").alias("frac_clamped"),

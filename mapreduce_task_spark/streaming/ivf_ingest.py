@@ -49,21 +49,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators.similarity import (
+from ..operators.similarity import (  # noqa: F401 — build_index: the family build
     assign_clusters,
     int_dot,
+    ivf_build_index as build_index,
     probe_clusters,
     quantized_cosine,
     with_quantized,
 )
-from .batchlog import (
-    BATCH_COL,
-    compact_log,
-    invalidate_watermark_cache,
+from . import batchlog
+from .batchlog import (  # noqa: F401 — the shared delta and monitor functions
+    allow_listed,
+    attach_batch_sink,
+    compact_delta,
+    compact_drift,
+    drift_signal,
     log_live,
-    merge_log_into_base,
+    read_drift_trend,
+    reset_drift,
     write_batch_partition,
 )
+
+LOGS = ("delta", "drift")
+VECTORS = "lists"  # the base dataset holding the (id, qv, nq) rows
 
 
 def append_batch(
@@ -72,20 +80,19 @@ def append_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    drift: bool = True,
     prequantized: bool = False,
 ) -> None:
     """Assign one (micro-)batch of embeddings to the index's frozen
     centroids and land it in the delta log's own batch partition,
     sub-partitioned by cluster (same physical shape as the base
-    lists, so searches prune identically). ``drift=True`` (default)
-    also lands one mergeable drift-monitor row for the batch (see the
-    drift section below) — one extra map-only pass + 1-row aggregate,
-    replay-idempotent like the delta write itself."""
+    lists, so searches prune identically), plus one mergeable
+    drift-monitor row for the batch (see the drift section below) —
+    one extra map-only pass + 1-row aggregate, replay-idempotent like
+    the delta write itself. ``prequantized`` rows are already (id, qv,
+    nq) on the index's grid (the retrain carry path)."""
     spark = batch_df.sparkSession
     cents = spark.read.parquet(f"{index_path}/centroids")
     if prequantized:
-        # retrain carry / replay path: batch_df IS (id, qv, nq) rows
         qd = batch_df.select(id_col, "qv", "nq")
     else:
         qd = with_quantized(batch_df, vec_col).select(id_col, "qv", "nq")
@@ -96,10 +103,9 @@ def append_batch(
         f"{index_path}/delta",
         sub_partition_cols=("cluster",),
     )
-    if drift:
-        write_batch_partition(
-            _ivf_drift_row(assigned, cents), batch_id, f"{index_path}/drift"
-        )
+    write_batch_partition(
+        _ivf_drift_row(assigned, cents), batch_id, f"{index_path}/drift"
+    )
 
 
 def streaming_ivf_append(
@@ -111,25 +117,23 @@ def streaming_ivf_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``ivf_build_index``) must exist."""
-
-    invalidate_watermark_cache(f"{index_path}/delta")
-    invalidate_watermark_cache(f"{index_path}/drift")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(batch_df, batch_id, index_path, id_col, vec_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        [f"{index_path}/{log}" for log in LOGS],
+        lambda df, b: append_batch(df, b, index_path, id_col, vec_col),
     )
 
 
-def _delta_live(spark: SparkSession, index_path: str) -> DataFrame | None:
-    return log_live(spark, f"{index_path}/delta")
+def _probes(qd: DataFrame, cents: DataFrame, id_col: str, nprobe: int):
+    """(query_id, qv_q, nq_q, cluster): each query's ``nprobe`` nearest
+    lists — the probe set the IVF families join candidates against."""
+    return probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
+        F.col(id_col).alias("query_id"),
+        F.col("qv").alias("qv_q"),
+        F.col("nq").alias("nq_q"),
+        "cluster",
+    )
 
 
 def search_with_delta(
@@ -158,18 +162,7 @@ def search_with_delta(
     extended over base and streamed-in rows alike."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     qd = with_quantized(queries, vec_col).select(id_col, "qv", "nq")
-    probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
-
-    allowed = (
-        None
-        if filter_ids is None
-        else filter_ids.select(F.col(id_col).alias("cand_id"))
-    )
+    probes = _probes(qd, cents, id_col, nprobe)
 
     def scored(lists: DataFrame) -> DataFrame:
         cand = lists.select(
@@ -178,8 +171,7 @@ def search_with_delta(
             F.col("nq").alias("nq_c"),
             "cluster",
         )
-        if allowed is not None:
-            cand = cand.join(allowed, "cand_id", "leftsemi")
+        cand = allow_listed(cand, id_col, filter_ids)
         return (
             F.broadcast(probes)
             .join(cand, "cluster")
@@ -196,7 +188,7 @@ def search_with_delta(
         )
 
     cand_scored = scored(spark.read.parquet(f"{index_path}/lists"))
-    delta = _delta_live(spark, index_path)
+    delta = log_live(spark, f"{index_path}/delta")
     if delta is not None:
         cand_scored = cand_scored.unionByName(scored(delta))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
@@ -205,46 +197,11 @@ def search_with_delta(
     )
 
 
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions ``__batch <= up_to_batch`` into the
-    negative-id partition (rows are immutable assigned vectors — the
-    fold re-selects them; the win is a bounded partition/file count).
-    The delta is append-only state never read back by the sink body,
-    so like the sketch store — and unlike the dedup logs —
-    ``up_to_batch`` need not be checkpoint-committed; a replay just
-    leaves a dead covered directory that readers ignore."""
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-        sub_partition_cols=("cluster",),
-    )
-
-
 def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
     """Rewrite the base inverted lists as base ∪ delta live view and
-    drop the merged delta partitions — the offline segment-merge, on
-    the shared marker-committed protocol (``batchlog.
-    merge_log_into_base``): side-directory write, marker commit,
-    independently resumable swap, targeted partition deletes. Crash
-    recovery is a re-run of this function — safe even if the append
-    stream was restarted first (batches appended after a crashed
-    merge survive; the committed merge's rows can never be lost to a
-    stale-base re-merge). Returns the number of rows merged in from
-    the delta (0 on a no-op or resume call). True multi-writer
-    atomicity needs a table format (Delta/Iceberg) — out of scope by
-    design."""
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(
-        spark, index_path, "delta", ["lists"], write_merged
-    )
+    drop the merged delta partitions (``batchlog.
+    merge_delta_into_base``)."""
+    return batchlog.merge_delta_into_base(spark, index_path, ("lists",))
 
 
 def delta_skew_report(spark: SparkSession, index_path: str) -> DataFrame:
@@ -295,20 +252,11 @@ def delta_skew_report(spark: SparkSession, index_path: str) -> DataFrame:
 # Quantizer drift monitor (r11) — the plain-IVF sibling of
 # ivfpq_ingest's: one mergeable row per appended batch holding the
 # exact sum of squared distances from each vector to its frozen home
-# centroid. The module doc above names the frozen-quantizer drift
-# tradeoff; these functions measure it. No reconstruction-error term
-# here — the flat index stores exact vectors, so the only drifting
-# quantity is coarse-assignment fit (list skew / falling recall at
-# fixed nprobe). Rows merge by pure sum; ratios compare against a
-# recorded build-corpus baseline.
+# centroid. No reconstruction-error term here — the flat index stores
+# exact vectors, so the only drifting quantity is coarse-assignment fit
+# (list skew / falling recall at fixed nprobe). Trend, signal,
+# compaction and reset are the shared ``batchlog`` monitor functions.
 # ---------------------------------------------------------------------------
-
-
-def _ivf_drift_sums() -> list:
-    return [
-        F.sum("n").alias("n"),
-        F.sum("sum_assign_d").alias("sum_assign_d"),
-    ]
 
 
 def _ivf_drift_row(assigned: DataFrame, cents: DataFrame) -> DataFrame:
@@ -333,85 +281,16 @@ def _ivf_drift_row(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def drift_baseline(spark: SparkSession, index_path: str) -> None:
+def drift_baseline(
+    spark: SparkSession, index_path: str, id_col: str = "vec_id"
+) -> None:
     """Record the build corpus's own mean assignment distance as the
     comparison base, from the index's persisted ``lists`` dataset (the
     raw corpus is never rescanned). Run once after ``ivf_build_index``
     or a retrain — after a retrain, ``reset_drift`` FIRST (old rows
-    measured under the old quantizer poison the new ratios; see
-    ivfpq_ingest.drift_baseline's retrain contract)."""
+    measured under the old quantizer poison the new ratios)."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     lists = spark.read.parquet(f"{index_path}/lists")
     _ivf_drift_row(lists, cents).write.mode("overwrite").parquet(
         f"{index_path}/drift_base"
     )
-
-
-def read_drift_trend(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """Per-batch (__batch, n, mean_assign_d, assign_ratio) against the
-    recorded baseline; None until a drift row exists. Ratio ~1.0 = the
-    stream matches the build corpus; sustained growth = schedule an
-    offline ``ivf_build_index`` retrain + ``drift_baseline``."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = spark.read.parquet(f"{index_path}/drift_base").select(
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad")
-    )
-    per = live.groupBy(BATCH_COL).agg(*_ivf_drift_sums())
-    return per.crossJoin(F.broadcast(base)).select(
-        BATCH_COL,
-        "n",
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("mean_assign_d"),
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-    )
-
-
-def drift_signal(
-    spark: SparkSession, index_path: str, retrain_ratio: float = 1.5
-) -> DataFrame | None:
-    """One row over ALL appended-so-far vectors: (n, assign_ratio,
-    retrain). Pure merge of the mergeable rows — cost independent of
-    appended volume. See ivfpq_ingest.drift_signal for the threshold
-    semantics."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = spark.read.parquet(f"{index_path}/drift_base").select(
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad")
-    )
-    out = live.agg(*_ivf_drift_sums()).crossJoin(F.broadcast(base)).select(
-        "n",
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-    )
-    return out.select(
-        "*", (F.col("assign_ratio") > F.lit(retrain_ratio)).alias("retrain")
-    )
-
-
-def compact_drift(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold old drift rows by pure sum (see ivfpq_ingest.compact_drift)."""
-    return compact_log(
-        spark,
-        f"{index_path}/drift",
-        up_to_batch,
-        lambda live: live.agg(*_ivf_drift_sums()),
-    )
-
-
-def reset_drift(spark: SparkSession, index_path: str) -> None:
-    """Drop the drift log and baseline before a retrain's new
-    ``drift_baseline`` (see ivfpq_ingest.reset_drift)."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for sub in ("drift", "drift_base"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}")
-        if fs.exists(p) and not fs.delete(p, True):
-            raise RuntimeError(f"could not remove {index_path}/{sub}")
-    invalidate_watermark_cache(f"{index_path}/drift")

@@ -54,23 +54,50 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.pq import (
+from ..operators.pq import (  # noqa: F401 — build_index: the family build
     _ivfpq_adc_scored,
     _rank_topk_by_distance,
     _refine_stage,
     _vectors_as_cvecs,
     check_index_meta,
+    ivfpq_build_index as build_index,
     ivfpq_encode_batch,
+    read_index_meta,
 )
 from ..operators.similarity import probe_clusters, with_quantized
-from .batchlog import (
-    BATCH_COL,
-    compact_log,
-    invalidate_watermark_cache,
+from .batchlog import (  # noqa: F401 — the shared delta and monitor functions
+    allow_listed,
+    attach_batch_sink,
+    compact_delta,
+    compact_drift,
+    drift_signal,
     log_live,
-    merge_log_into_base,
+    merge_delta_into_base,
+    read_drift_trend,
+    reset_drift,
     write_batch_partition,
 )
+
+LOGS = ("delta", "drift")
+VECTORS = "vectors"  # the base dataset holding the (id, qv, nq) rows
+_BUILD_DEFAULTS = {"m": 8, "dim": 64, "per_list": False, "metric": "l2"}
+
+
+def _shape(spark: SparkSession, index_path: str, **given) -> dict:
+    """The index's (m, dim, per_list, metric): every argument left
+    None is read from the index meta (the build defaults for a legacy
+    meta-less index); every one passed must match the meta
+    (``check_index_meta`` — appending un-normalized rows to a cosine
+    index would silently corrupt every ranking the delta touches)."""
+    meta = read_index_meta(spark, index_path) or {}
+    shape = {
+        k: meta.get(k, d) if given.get(k) is None else given[k]
+        for k, d in _BUILD_DEFAULTS.items()
+    }
+    if shape["dim"] % shape["m"]:
+        raise ValueError(f"dim {shape['dim']} not divisible by m {shape['m']}")
+    check_index_meta(spark, index_path, **shape)
+    return shape
 
 
 def append_batch(
@@ -79,49 +106,51 @@ def append_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
-    per_list: bool = False,
+    m: int | None = None,
+    dim: int | None = None,
+    per_list: bool | None = None,
     metric: str = "l2",
-    drift: bool = True,
     prequantized: bool = False,
 ) -> None:
     """Encode one (micro-)batch against the index's frozen coarse
     quantizer + residual codebook and land it in the delta log's own
     batch partition, sub-partitioned by cluster (same physical shape
     as the base lists, so searches prune identically). ``m``/``dim``/
-    ``per_list``/``metric`` must match the build (same plan-time
-    contract as ``ivfpq_search_index``; metric is validated against
-    the persisted meta — appending un-normalized rows to a cosine
-    index would silently corrupt every ranking the delta touches).
+    ``per_list`` default to the index meta; ``metric`` describes the
+    incoming vectors and is checked against it (``_shape``).
+    ``prequantized`` rows are already (id, qv, nq) on the index's grid
+    (the retrain carry path), so the index's own metric applies.
 
-    ``drift=True`` (default) also lands one mergeable drift-monitor
-    row for the batch (see the drift section below) — one extra
-    map-only pass + 1-row aggregate over the micro-batch, the price of
-    a frozen-quantizer design NOT degrading silently. The drift row is
-    written even when the delta write is a merged-watermark replay
-    skip: the batch's vectors are part of the appended-since-build
-    population either way, and a replay overwrites its own drift
-    partition with identical numbers (deterministic encode)."""
+    Also lands one mergeable drift-monitor row for the batch (see the
+    drift section below) — one extra map-only pass + 1-row aggregate
+    over the micro-batch, the price of a frozen-quantizer design NOT
+    degrading silently. The drift row is written even when the delta
+    write is a merged-watermark replay skip: the batch's vectors are
+    part of the appended-since-build population either way, and a
+    replay overwrites its own drift partition with identical numbers
+    (deterministic encode)."""
     spark = batch_df.sparkSession
-    check_index_meta(
-        spark, index_path, metric=metric, m=m, dim=dim, per_list=per_list
+    shape = _shape(
+        spark, index_path, m=m, dim=dim, per_list=per_list,
+        metric=None if prequantized else metric,
     )
     coarse = spark.read.parquet(f"{index_path}/coarse")
     cents = spark.read.parquet(f"{index_path}/codebook")
     rows = ivfpq_encode_batch(
-        batch_df, coarse, cents, id_col, vec_col, m=m, dim=dim,
-        per_list=per_list, metric=metric, prequantized=prequantized,
+        batch_df, coarse, cents, id_col, vec_col, **shape,
+        prequantized=prequantized,
     )
     write_batch_partition(
         rows, batch_id, f"{index_path}/delta", sub_partition_cols=("cluster",)
     )
-    if drift:
-        write_batch_partition(
-            _drift_stats_row(rows, coarse, cents, m, dim // m, per_list),
-            batch_id,
-            f"{index_path}/drift",
-        )
+    write_batch_partition(
+        _drift_stats_row(
+            rows, coarse, cents, shape["m"], shape["dim"] // shape["m"],
+            shape["per_list"],
+        ),
+        batch_id,
+        f"{index_path}/drift",
+    )
 
 
 def streaming_ivfpq_append(
@@ -130,35 +159,22 @@ def streaming_ivfpq_append(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
-    per_list: bool = False,
+    m: int | None = None,
+    dim: int | None = None,
+    per_list: bool | None = None,
     metric: str = "l2",
-    drift: bool = True,
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``ivfpq_build_index``) must exist."""
-    invalidate_watermark_cache(f"{index_path}/delta")
-    invalidate_watermark_cache(f"{index_path}/drift")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(
-            batch_df, batch_id, index_path, id_col, vec_col,
-            m=m, dim=dim, per_list=per_list, metric=metric, drift=drift,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        [f"{index_path}/{log}" for log in LOGS],
+        lambda df, b: append_batch(
+            df, b, index_path, id_col, vec_col,
+            m=m, dim=dim, per_list=per_list, metric=metric,
+        ),
     )
-
-
-def _delta_live(spark: SparkSession, index_path: str) -> DataFrame | None:
-    return log_live(spark, f"{index_path}/delta")
 
 
 def search_with_delta(
@@ -169,9 +185,9 @@ def search_with_delta(
     vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
-    m: int = 8,
-    dim: int = 64,
-    per_list: bool = False,
+    m: int | None = None,
+    dim: int | None = None,
+    per_list: bool | None = None,
     refine: int = 0,
     filter_ids: DataFrame | None = None,
     metric: str = "l2",
@@ -193,13 +209,13 @@ def search_with_delta(
     ``filter_ids`` pre-filters candidates on BOTH sides to an
     allow-list before any ranking — the same filtered-search contract
     as ``ivfpq_search_index(filter_ids=)``, here spanning base and
-    streamed-in rows alike."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    check_index_meta(
-        spark, index_path, metric=metric, m=m, dim=dim, per_list=per_list
+    streamed-in rows alike. ``m``/``dim``/``per_list`` default to the
+    index meta (``_shape``)."""
+    shape = _shape(
+        spark, index_path, m=m, dim=dim, per_list=per_list, metric=metric
     )
+    m, per_list = shape["m"], shape["per_list"]
+    dsub = shape["dim"] // m
     coarse = spark.read.parquet(f"{index_path}/coarse")
     cents = spark.read.parquet(f"{index_path}/codebook")
 
@@ -214,27 +230,16 @@ def search_with_delta(
             F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
         )
     )
-    allowed = (
-        None
-        if filter_ids is None
-        else filter_ids.select(F.col(id_col).alias("cand_id"))
-    )
-    base_cand = spark.read.parquet(f"{index_path}/codes").select(
-        F.col(id_col).alias("cand_id"), "cluster", "codes"
-    )
-    if allowed is not None:
-        base_cand = base_cand.join(allowed, "cand_id", "leftsemi")
-    scored = _ivfpq_adc_scored(base_cand, rq, cents, m, dsub, per_list=per_list)
-    delta = _delta_live(spark, index_path)
+
+    def scored_side(lists: DataFrame) -> DataFrame:
+        cand = lists.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
+        cand = allow_listed(cand, id_col, filter_ids)
+        return _ivfpq_adc_scored(cand, rq, cents, m, dsub, per_list=per_list)
+
+    scored = scored_side(spark.read.parquet(f"{index_path}/codes"))
+    delta = log_live(spark, f"{index_path}/delta")
     if delta is not None:
-        delta_cand = delta.select(
-            F.col(id_col).alias("cand_id"), "cluster", "codes"
-        )
-        if allowed is not None:
-            delta_cand = delta_cand.join(allowed, "cand_id", "leftsemi")
-        scored = scored.unionByName(
-            _ivfpq_adc_scored(delta_cand, rq, cents, m, dsub, per_list=per_list)
-        )
+        scored = scored.unionByName(scored_side(delta))
     if refine:
         cvecs = _vectors_as_cvecs(
             spark.read.parquet(f"{index_path}/vectors"), id_col
@@ -247,49 +252,6 @@ def search_with_delta(
     return _rank_topk_by_distance(scored, k).drop("cluster")
 
 
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions ``__batch <= up_to_batch`` into the
-    negative-id partition (rows are immutable encoded vectors — the
-    fold re-selects them; the win is bounded partition/file counts).
-    Append-only state never read back by the sink body, so
-    ``up_to_batch`` need not be checkpoint-committed (see
-    ivf_ingest.compact_delta)."""
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-        sub_partition_cols=("cluster",),
-    )
-
-
-def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite the base ``codes`` AND ``vectors`` datasets as
-    base ∪ delta live view and drop the merged delta partitions — the
-    offline segment merge, on the shared marker-committed protocol
-    (``batchlog.merge_log_into_base``). The marker commit is what
-    makes a TWO-dataset base safe: after a crash anywhere past it,
-    recovery finishes both swaps from the recorded state, so codes and
-    vectors can never end half-swapped (a half-swap would silently
-    drop refine candidates at the (cluster, cand_id) join) and a
-    committed merge's rows can never be lost to a stale-base re-merge
-    even if the append stream was restarted first. Returns the number
-    of delta rows merged in (0 on a no-op or resume call)."""
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        # each base dataset holds its own column subset of the delta
-        # rows ((id, codes) vs (id, qv, nq), cluster-partitioned) —
-        # align before the union
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(
-        spark, index_path, "delta", ["codes", "vectors"], write_merged
-    )
-
-
 # ---------------------------------------------------------------------------
 # Quantizer/codebook drift monitor
 #
@@ -297,11 +259,9 @@ def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
 # distribution moves away from what the quantizer was trained on:
 # results stay exactly-correct per the ADC/refine contracts, but
 # recall falls because residuals quantize worse and vectors land in
-# less discriminating lists. The module doc above names the failure
-# mode; these functions make it OBSERVABLE, per the quality_monitor
-# pattern: one tiny mergeable row per appended batch, a recorded
-# baseline from the build-time corpus, and a documented retrain signal
-# (the ratio of delta means to base means).
+# less discriminating lists. The row below makes it OBSERVABLE; trend,
+# signal, compaction and reset are the shared ``batchlog`` monitor
+# functions (ratios of delta means to the recorded build-corpus means).
 #
 # Two signals per row, both exact int64-per-row sums (decimal(38,0)
 # across rows so a 100 TB corpus's sums cannot overflow):
@@ -314,14 +274,6 @@ def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
 # retrain trigger. Rows merge by pure sum (compact_drift), so any time
 # range re-aggregates without rescanning vectors.
 # ---------------------------------------------------------------------------
-
-def _drift_sums() -> list:
-    # built per call: classic-mode Column creation needs a live session
-    return [
-        F.sum("n").alias("n"),
-        F.sum("sum_assign_d").alias("sum_assign_d"),
-        F.sum("sum_quant_err").alias("sum_quant_err"),
-    ]
 
 
 def _drift_stats_row(
@@ -386,15 +338,18 @@ def drift_baseline(
     spark: SparkSession,
     index_path: str,
     id_col: str = "vec_id",
-    m: int = 8,
-    dim: int = 64,
-    per_list: bool = False,
+    m: int | None = None,
+    dim: int | None = None,
+    per_list: bool | None = None,
 ) -> None:
     """Record the build-time corpus's own drift stats as the
     comparison base, from the INDEX's persisted datasets (one read of
     vectors ⋈ codes — the raw corpus is never rescanned). Run once
     after ``ivfpq_build_index`` (or after a retrain); readers join it
-    to per-batch rows to turn absolute errors into ratios.
+    to per-batch rows to turn absolute errors into ratios. The shape
+    defaults to the index meta (a per-list or non-64-dim index
+    baselined under the wrong shape would record silently wrong
+    reconstruction errors).
 
     RETRAIN CONTRACT: after rebuilding the index (new quantizer /
     codebook), existing drift rows describe batches encoded under the
@@ -403,128 +358,13 @@ def drift_baseline(
     re-running this, then re-baseline. (The delta log itself is merged
     or discarded by the retrain anyway; the drift log is the one
     artifact that would silently survive.)"""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
+    shape = _shape(spark, index_path, m=m, dim=dim, per_list=per_list)
     coarse = spark.read.parquet(f"{index_path}/coarse")
     cents = spark.read.parquet(f"{index_path}/codebook")
     vectors = spark.read.parquet(f"{index_path}/vectors")
     codes = spark.read.parquet(f"{index_path}/codes").select(id_col, "codes")
     encoded = vectors.join(codes, id_col)
-    _drift_stats_row(encoded, coarse, cents, m, dim // m, per_list).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/drift_base")
-
-
-def read_drift_trend(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """Per-batch drift trend: (__batch, n, mean_assign_d,
-    mean_quant_err, assign_ratio, quant_ratio), ratios against the
-    recorded baseline means. None until a drift row exists. The
-    numbers to watch are the ratios: ~1.0 = the stream matches the
-    build corpus; sustained growth = the frozen quantizer/codebook no
-    longer fit the data and recall is silently degrading — schedule
-    ``ivfpq_build_index`` + ``drift_baseline`` (retrain)."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = (
-        spark.read.parquet(f"{index_path}/drift_base")
-        .select(
-            (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad"),
-            (F.col("sum_quant_err") / F.col("n")).cast("double").alias("__bqe"),
-        )
-    )
-    per = live.groupBy(BATCH_COL).agg(*_drift_sums())
-    return per.crossJoin(F.broadcast(base)).select(
-        BATCH_COL,
-        "n",
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("mean_assign_d"),
-        (F.col("sum_quant_err") / F.col("n")).cast("double").alias("mean_quant_err"),
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-        (F.col("sum_quant_err") / F.col("n") / F.col("__bqe"))
-        .cast("double")
-        .alias("quant_ratio"),
-    )
-
-
-def drift_signal(
-    spark: SparkSession, index_path: str, retrain_ratio: float = 1.5
-) -> DataFrame | None:
-    """The retrain trigger, as one row over ALL appended-so-far rows:
-    (n, assign_ratio, quant_ratio, retrain). ``retrain`` is true when
-    either ratio exceeds ``retrain_ratio`` — i.e. the streamed data's
-    mean coarse-assignment distance or PQ reconstruction error has
-    grown that much past the build corpus's own. 1.5 is a conservative
-    default (50% more reconstruction error than trained-on data);
-    tighten for recall-critical serving. None until a drift row
-    exists. Pure merge of the mergeable rows — cost is independent of
-    how much data was appended.
-
-    CALIBRATION CAVEAT (measured r11): with ``per_list=True``
-    codebooks the baseline reconstruction error is OVER-FIT — ksub
-    centroids per small inverted list nearly memorize the build
-    corpus — so even in-distribution appends read quant ratios of
-    ~2-3x (2.68 on the test fixture, arithmetic verified exactly).
-    For per-list indexes set ``retrain_ratio`` relative to the ratio
-    an in-distribution holdout batch reads, not to 1.0; the
-    assignment-distance ratio has no codebook to over-fit and stays
-    near 1 either way."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = (
-        spark.read.parquet(f"{index_path}/drift_base")
-        .select(
-            (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad"),
-            (F.col("sum_quant_err") / F.col("n")).cast("double").alias("__bqe"),
-        )
-    )
-    total = live.agg(*_drift_sums())
-    out = total.crossJoin(F.broadcast(base)).select(
-        "n",
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-        (F.col("sum_quant_err") / F.col("n") / F.col("__bqe"))
-        .cast("double")
-        .alias("quant_ratio"),
-    )
-    return out.select(
-        "*",
-        (
-            (F.col("assign_ratio") > F.lit(retrain_ratio))
-            | (F.col("quant_ratio") > F.lit(retrain_ratio))
-        ).alias("retrain"),
-    )
-
-
-def compact_drift(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold old drift rows into the negative-id partition by pure sum
-    — the per-batch trend for folded batches collapses into one
-    merged row, the overall ``drift_signal`` is unchanged (sums are
-    associative). Same sketch-store-grade contract as the other
-    monitor logs: never read back by a sink body, so ``up_to_batch``
-    need not be checkpoint-committed."""
-    return compact_log(
-        spark,
-        f"{index_path}/drift",
-        up_to_batch,
-        lambda live: live.agg(*_drift_sums()),
-    )
-
-
-def reset_drift(spark: SparkSession, index_path: str) -> None:
-    """Drop the drift log and baseline entirely — REQUIRED before a
-    retrain's new ``drift_baseline`` (see its retrain contract: rows
-    measured against the old quantizer poison ratios against the new
-    one). Loud on a failed delete like every protocol step."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for sub in ("drift", "drift_base"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}")
-        if fs.exists(p) and not fs.delete(p, True):
-            raise RuntimeError(f"could not remove {index_path}/{sub}")
-    invalidate_watermark_cache(f"{index_path}/drift")
+    _drift_stats_row(
+        encoded, coarse, cents, shape["m"], shape["dim"] // shape["m"],
+        shape["per_list"],
+    ).write.mode("overwrite").parquet(f"{index_path}/drift_base")

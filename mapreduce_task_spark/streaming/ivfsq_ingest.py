@@ -8,13 +8,13 @@ per batch:
 
 - the coarse k-means centroids (frozen, like ivf_ingest) — each batch
   is assigned by one broadcast argmin and the standard
-  assignment-distance DRIFT row lands (the ivf_ingest machinery is
-  reused verbatim: ``drift``/``drift_base`` logs, trend/signal/
-  compact/reset all operate on this index's path);
+  assignment-distance DRIFT row lands (ivf_ingest's row; the shared
+  ``batchlog`` trend/signal/compact/reset operate on this index's
+  ``drift``/``drift_base`` logs);
 - the SQ bounds (frozen, 1-row global or k-row per-list) — each batch
   encodes map-only against them and the SATURATION row counts clamped
-  components (the sq_ingest machinery reused verbatim on the ``sat``
-  log; per-list bounds clamp per list, the join handles it).
+  components (sq_ingest's row on the ``sat`` log; per-list bounds
+  clamp per list, the join handles it).
 
 Delta rows are (id, cluster, codes[, qv, nq]) in the delta log's own
 batch partition sub-partitioned by cluster — the same physical shape
@@ -29,35 +29,40 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.similarity import assign_clusters, probe_clusters, with_quantized
-from ..operators.sq import _assert_dim, _codes_expr
-from .batchlog import (
-    compact_log,
-    invalidate_watermark_cache,
-    log_live,
-    merge_log_into_base,
-    write_batch_partition,
+from ..operators.pq import (
+    _refine_exact,
+    _sub_dist,
+    check_index_meta,
+    read_index_meta,
 )
-from .ivf_ingest import (  # noqa: F401 — drift monitors reused verbatim
-    _ivf_drift_row,
+from ..operators.similarity import assign_clusters, with_quantized
+from ..operators.sq import (  # noqa: F401 — build_index: the family build
+    _assert_dim,
+    _codes_expr,
+    _ivfsq_score,
+    ivfsq_build_index as build_index,
+)
+from .batchlog import (  # noqa: F401 — the shared delta and monitor functions
+    allow_listed,
+    attach_batch_sink,
+    compact_delta,
     compact_drift,
-    drift_signal,
-    read_drift_trend,
-    reset_drift,
-)
-from .sq_ingest import (  # noqa: F401 — saturation monitors reused verbatim
-    _sat_row_from_joined,
     compact_saturation,
+    drift_signal,
+    log_live,
+    merge_delta_into_base,
+    read_drift_trend,
     read_saturation_trend,
+    reset_drift,
     reset_saturation,
     saturation_signal,
+    write_batch_partition,
 )
+from .ivf_ingest import _ivf_drift_row, _probes
+from .sq_ingest import _refine_vectors, _sat_row_from_joined
 
-
-def _meta(spark: SparkSession, index_path: str) -> dict:
-    from ..operators.pq import read_index_meta
-
-    return read_index_meta(spark, index_path) or {}
+LOGS = ("delta", "drift", "sat")
+VECTORS = "vectors"  # the base dataset holding the (id, qv, nq) rows
 
 
 def append_batch(
@@ -66,17 +71,17 @@ def append_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    monitors: bool = True,
     prequantized: bool = False,
 ) -> None:
     """Assign one (micro-)batch to the frozen coarse centroids, encode
     against the frozen SQ bounds, and land it in the delta log's own
-    batch partition sub-partitioned by cluster. ``monitors=True``
-    (default) also lands the assignment-distance drift row AND the
-    bounds-saturation row — two extra map-only passes + 1-row
-    aggregates, replay-idempotent like the delta write."""
+    batch partition sub-partitioned by cluster, plus the
+    assignment-distance drift row AND the bounds-saturation row — two
+    extra map-only passes + 1-row aggregates, replay-idempotent like
+    the delta write. Metric, ``per_list`` and ``store_vectors`` come
+    from the index meta."""
     spark = batch_df.sparkSession
-    meta = _meta(spark, index_path)
+    meta = read_index_meta(spark, index_path) or {}
     kind = meta.get("kind", "ivfsq")
     if kind != "ivfsq":
         raise ValueError(
@@ -115,13 +120,12 @@ def append_batch(
     write_batch_partition(
         rows, batch_id, f"{index_path}/delta", sub_partition_cols=("cluster",)
     )
-    if monitors:
-        write_batch_partition(
-            _ivf_drift_row(assigned, cents), batch_id, f"{index_path}/drift"
-        )
-        write_batch_partition(
-            _sat_row_from_joined(joined), batch_id, f"{index_path}/sat"
-        )
+    write_batch_partition(
+        _ivf_drift_row(assigned, cents), batch_id, f"{index_path}/drift"
+    )
+    write_batch_partition(
+        _sat_row_from_joined(joined), batch_id, f"{index_path}/sat"
+    )
 
 
 def streaming_ivfsq_append(
@@ -133,20 +137,11 @@ def streaming_ivfsq_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``ivfsq_build_index``) must exist."""
-
-    for log in ("delta", "drift", "sat"):
-        invalidate_watermark_cache(f"{index_path}/{log}")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(batch_df, batch_id, index_path, id_col, vec_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        [f"{index_path}/{log}" for log in LOGS],
+        lambda df, b: append_batch(df, b, index_path, id_col, vec_col),
     )
 
 
@@ -171,27 +166,16 @@ def search_with_delta(
     ``refine`` reranks against base ∪ delta vectors and refuses on a
     ``store_vectors=False`` index; ``filter_ids`` pre-filters
     candidates on both sides."""
-    from ..operators.pq import _refine_exact, _sub_dist, check_index_meta
-    from ..operators.sq import _ivfsq_score
-
     check_index_meta(spark, index_path, metric=metric, dim=dim, kind="ivfsq")
-    meta = _meta(spark, index_path)
+    meta = read_index_meta(spark, index_path) or {}
     per_list = bool(meta.get("per_list", False))
     cents = spark.read.parquet(f"{index_path}/centroids")
     bounds = spark.read.parquet(f"{index_path}/bounds")
     delta = log_live(spark, f"{index_path}/delta")
 
-    allowed = (
-        None
-        if filter_ids is None
-        else filter_ids.select(F.col(id_col).alias("cand_id"))
-    )
-
     def side(df: DataFrame) -> DataFrame:
         c = df.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
-        if allowed is not None:
-            c = c.join(allowed, "cand_id", "leftsemi")
-        return c
+        return allow_listed(c, id_col, filter_ids)
 
     sides = [side(spark.read.parquet(f"{index_path}/codes"))]
     if delta is not None:
@@ -203,82 +187,33 @@ def search_with_delta(
         ),
         "nq",
     )
-    probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
+    probes = _probes(qd, cents, id_col, nprobe)
     cvecs = None
     if refine:
-        if not meta.get("store_vectors", True):
-            raise ValueError(
-                f"IVF-SQ index at {index_path} was built store_vectors=False "
-                "— it cannot serve refine>0; rebuild with store_vectors=True "
-                "or search with refine=0"
-            )
-        cvecs = spark.read.parquet(f"{index_path}/vectors").select(
+        cvecs = _refine_vectors(
+            spark, index_path, meta, delta, "IVF-SQ",
+            (id_col, "cluster", "qv", "nq"),
+        ).select(
             F.col(id_col).alias("cand_id"),
             "cluster",
             F.col("qv").alias("qv_c"),
             F.col("nq").alias("nq_c"),
         )
-        if delta is not None:
-            cvecs = cvecs.unionByName(
-                delta.select(
-                    F.col(id_col).alias("cand_id"),
-                    "cluster",
-                    F.col("qv").alias("qv_c"),
-                    F.col("nq").alias("nq_c"),
-                )
-            )
     return _ivfsq_score(
         probes, sides, bounds, cvecs, k, refine, per_list,
         _sub_dist, _refine_exact,
     )
 
 
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions into the negative-id partition, keeping
-    the cluster sub-partitioning (see ivf_ingest.compact_delta for the
-    watermark argument)."""
-    from .batchlog import BATCH_COL
-
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-        sub_partition_cols=("cluster",),
-    )
-
-
-def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite base codes (and vectors, when stored) as base ∪ delta
-    live view and drop the merged delta — the offline segment merge on
-    the shared marker-committed protocol. Centroids AND bounds stay
-    frozen (a merge is not a retrain/refit)."""
-    meta = _meta(spark, index_path)
-    targets = ["codes"] + (
-        ["vectors"] if meta.get("store_vectors", True) else []
-    )
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(spark, index_path, "delta", targets, write_merged)
-
-
-def drift_baseline(spark: SparkSession, index_path: str) -> None:
+def drift_baseline(
+    spark: SparkSession, index_path: str, id_col: str = "vec_id"
+) -> None:
     """Record the build corpus's own mean assignment distance from the
     index's persisted ``vectors`` dataset (requires a
     ``store_vectors=True`` build — the codes alone cannot reproduce
     exact distances). Run once after ``ivfsq_build_index`` or a
     retrain (``reset_drift`` first, see ivf_ingest)."""
-    meta = _meta(spark, index_path)
+    meta = read_index_meta(spark, index_path) or {}
     if not meta.get("store_vectors", True):
         raise ValueError(
             f"IVF-SQ index at {index_path} was built store_vectors=False — "

@@ -40,11 +40,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .batchlog import (
     BATCH_COL,
-    batch_ids as _batch_ids,
+    attach_batch_sink,
     compact_log,
-    covered_watermark as _covered,
-    invalidate_watermark_cache,
-    live_view as _live,
+    read_before,
     write_batch_partition,
 )
 
@@ -101,18 +99,13 @@ def streaming_sketch_store(
     val_col: str,
 ):
     """Attach the sketch-store sink; returns the StreamingQuery."""
-    invalidate_watermark_cache(path)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_batch_sketches(batch_df, batch_id, path, group_col, key_col, val_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        [path],
+        lambda df, b: write_batch_sketches(
+            df, b, path, group_col, key_col, val_col
+        ),
     )
 
 
@@ -128,12 +121,11 @@ def read_rollup(
     group (e.g. ["window", "type"]) the TOTAL row carries 'TOTAL' in
     every group column.
 
-    Reads through the coverage watermark (``_live``), so answers are
+    Reads through the coverage watermark (``read_before``), so answers are
     exactly-once even when a compaction crashed mid-cleanup or a
     replayed micro-batch re-created an already-compacted partition."""
     gcols = _cols(group_col)
-    raw = spark.read.parquet(path)
-    sk = _live(raw, _covered(_batch_ids(raw)))
+    sk = read_before(spark.read.parquet(path))
     ests = [
         F.hll_sketch_estimate(F.hll_union_agg("hll")).alias("approx_distinct"),
         F.kll_sketch_get_quantile_double(

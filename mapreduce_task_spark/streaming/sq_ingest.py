@@ -38,22 +38,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.pq import check_index_meta, read_index_meta
 from ..operators.similarity import with_quantized
 from ..operators.sq import _assert_dim, _codes_expr, _sq_flat_score
-from .batchlog import (
-    BATCH_COL,
-    compact_log,
-    invalidate_watermark_cache,
+from . import batchlog
+from .batchlog import (  # noqa: F401 — the shared monitor functions
+    allow_listed,
+    attach_batch_sink,
+    compact_saturation,
     log_live,
-    merge_log_into_base,
+    read_saturation_trend,
+    reset_saturation,
+    saturation_signal,
     write_batch_partition,
 )
 
-
-def _meta(spark: SparkSession, index_path: str) -> dict:
-    from ..operators.pq import read_index_meta
-
-    return read_index_meta(spark, index_path) or {}
+LOGS = ("delta", "sat")
 
 
 def append_batch(
@@ -62,17 +62,15 @@ def append_batch(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    saturation: bool = True,
 ) -> None:
     """Encode one (micro-)batch against the index's FROZEN bounds and
     land it in the delta log's own batch partition. Delta rows carry
     (id, codes) plus (qv, nq) when the index stores vectors (so the
-    refine stage covers streamed-in rows too). ``saturation=True``
-    (default) also lands one mergeable clamp-counter row — one extra
-    map-only pass + 1-row aggregate, replay-idempotent like the delta
-    write itself."""
+    refine stage covers streamed-in rows too). Also lands one
+    mergeable clamp-counter row — one extra map-only pass + 1-row
+    aggregate, replay-idempotent like the delta write itself."""
     spark = batch_df.sparkSession
-    meta = _meta(spark, index_path)
+    meta = read_index_meta(spark, index_path) or {}
     kind = meta.get("kind", "sq8")
     if kind != "sq8":
         raise ValueError(
@@ -96,10 +94,9 @@ def append_batch(
     else:
         rows = joined.select(id_col, _codes_expr().alias("codes"))
     write_batch_partition(rows, batch_id, f"{index_path}/delta")
-    if saturation:
-        write_batch_partition(
-            _saturation_row(qd, bounds), batch_id, f"{index_path}/sat"
-        )
+    write_batch_partition(
+        _saturation_row(qd, bounds), batch_id, f"{index_path}/sat"
+    )
 
 
 def streaming_sq_append(
@@ -111,20 +108,11 @@ def streaming_sq_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``sq_build_index``) must exist."""
-
-    invalidate_watermark_cache(f"{index_path}/delta")
-    invalidate_watermark_cache(f"{index_path}/sat")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(batch_df, batch_id, index_path, id_col, vec_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        [f"{index_path}/{log}" for log in LOGS],
+        lambda df, b: append_batch(df, b, index_path, id_col, vec_col),
     )
 
 
@@ -148,10 +136,8 @@ def search_with_delta(
     ``store_vectors=False`` index; ``filter_ids`` pre-filters
     candidates on both sides before scoring (the package-wide
     filtered-search contract)."""
-    from ..operators.pq import check_index_meta
-
     check_index_meta(spark, index_path, metric=metric, dim=dim, kind="sq8")
-    meta = _meta(spark, index_path)
+    meta = read_index_meta(spark, index_path) or {}
     bounds = spark.read.parquet(f"{index_path}/bounds")
     cand = spark.read.parquet(f"{index_path}/codes").select(
         F.col(id_col).alias("cand_id"), "codes"
@@ -161,12 +147,7 @@ def search_with_delta(
         cand = cand.unionByName(
             delta.select(F.col(id_col).alias("cand_id"), "codes")
         )
-    if filter_ids is not None:
-        cand = cand.join(
-            filter_ids.select(F.col(id_col).alias("cand_id")),
-            "cand_id",
-            "leftsemi",
-        )
+    cand = allow_listed(cand, id_col, filter_ids)
     qd = with_quantized(queries, vec_col, metric=metric).select(
         id_col,
         _assert_dim(F.col("qv"), F.lit(dim), "sq_search_with_delta").alias(
@@ -176,67 +157,48 @@ def search_with_delta(
     )
     vectors = None
     if refine:
-        if not meta.get("store_vectors", True):
-            raise ValueError(
-                f"SQ index at {index_path} was built store_vectors=False — "
-                "it cannot serve refine>0; rebuild with store_vectors=True "
-                "or search with refine=0"
-            )
-        vectors = spark.read.parquet(f"{index_path}/vectors").select(
-            id_col, "qv", "nq"
+        vectors = _refine_vectors(
+            spark, index_path, meta, delta, "SQ", (id_col, "qv", "nq")
         )
-        if delta is not None:
-            vectors = vectors.unionByName(delta.select(id_col, "qv", "nq"))
     return _sq_flat_score(qd, cand, bounds, id_col, k, refine, vectors)
 
 
+def _refine_vectors(
+    spark: SparkSession, index_path: str, meta: dict, delta, label: str, cols
+) -> DataFrame:
+    """Base ∪ delta ``cols`` of the stored vectors the refine stage
+    reranks against; refuses an index built ``store_vectors=False``."""
+    if not meta.get("store_vectors", True):
+        raise ValueError(
+            f"{label} index at {index_path} was built store_vectors=False "
+            "— it cannot serve refine>0; rebuild with store_vectors=True "
+            "or search with refine=0"
+        )
+    vectors = spark.read.parquet(f"{index_path}/vectors").select(*cols)
+    if delta is not None:
+        vectors = vectors.unionByName(delta.select(*cols))
+    return vectors
+
+
 def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions ``__batch <= up_to_batch`` into the
-    negative-id partition (rows are immutable encoded vectors — the
-    fold re-selects them; the win is a bounded partition/file count).
-    Append-only state never read back by the sink body, so
-    ``up_to_batch`` need not be checkpoint-committed (the ivf_ingest
-    argument)."""
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-    )
+    """``batchlog.compact_delta`` on the flat (unclustered) delta."""
+    return batchlog.compact_delta(spark, index_path, up_to_batch, ())
 
 
 def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite base codes (and vectors, when stored) as base ∪ delta
-    live view and drop the merged delta partitions — the offline
-    segment merge on the shared marker-committed protocol
-    (``batchlog.merge_log_into_base``); crash recovery is a re-run.
-    Bounds stay frozen (a merge is not a refit); returns the number of
-    delta rows merged in (0 on a no-op or resume call)."""
-    meta = _meta(spark, index_path)
-    targets = ["codes"] + (
-        ["vectors"] if meta.get("store_vectors", True) else []
+    """``batchlog.merge_delta_into_base`` on the flat (unclustered)
+    codes and vectors; the bounds stay frozen (a merge is not a
+    refit)."""
+    return batchlog.merge_delta_into_base(
+        spark, index_path, sub_partition_cols=()
     )
 
-    def write_merged(live: DataFrame, name: str) -> None:
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(spark, index_path, "delta", targets, write_merged)
-
 
 # ---------------------------------------------------------------------------
-# Bounds-saturation monitor — the SQ analogue of quantizer drift.
+# Bounds-saturation monitor — the SQ analogue of quantizer drift. The
+# row below holds its sums; trend, signal, compaction and reset are the
+# shared ``batchlog`` monitor functions.
 # ---------------------------------------------------------------------------
-
-
-def _sat_sums() -> list:
-    return [
-        F.sum("n").alias("n"),
-        F.sum("n_components").alias("n_components"),
-        F.sum("n_clamped").alias("n_clamped"),
-    ]
 
 
 def _saturation_row(qd: DataFrame, bounds: DataFrame) -> DataFrame:
@@ -275,70 +237,3 @@ def _sat_row_from_joined(joined: DataFrame) -> DataFrame:
             F.sum("__cl").alias("n_clamped"),
         )
     )
-
-
-def read_saturation_trend(
-    spark: SparkSession, index_path: str
-) -> DataFrame | None:
-    """Per-batch (__batch, n, frac_clamped); None until a saturation
-    row exists. The build corpus clamps nothing by construction, so
-    sustained growth from 0 = the stream is leaving the fitted range —
-    schedule an offline ``sq_build_index`` refit + ``reset_saturation``."""
-    live = log_live(spark, f"{index_path}/sat")
-    if live is None:
-        return None
-    per = live.groupBy(BATCH_COL).agg(*_sat_sums())
-    return per.select(
-        BATCH_COL,
-        "n",
-        (F.col("n_clamped") / F.col("n_components"))
-        .cast("double")
-        .alias("frac_clamped"),
-    )
-
-
-def saturation_signal(
-    spark: SparkSession, index_path: str, refit_frac: float = 0.01
-) -> DataFrame | None:
-    """One row over ALL appended-so-far vectors: (n, n_components,
-    n_clamped, frac_clamped, refit). Pure merge of the mergeable rows —
-    cost independent of appended volume. ``refit`` trips when more
-    than ``refit_frac`` of streamed components clamped (an absolute
-    threshold — the baseline is exactly 0)."""
-    live = log_live(spark, f"{index_path}/sat")
-    if live is None:
-        return None
-    out = live.agg(*_sat_sums()).select(
-        "*",
-        (F.col("n_clamped") / F.col("n_components"))
-        .cast("double")
-        .alias("frac_clamped"),
-    )
-    return out.select(
-        "*", (F.col("frac_clamped") > F.lit(refit_frac)).alias("refit")
-    )
-
-
-def compact_saturation(
-    spark: SparkSession, index_path: str, up_to_batch: int
-) -> int:
-    """Fold old saturation rows by pure sum."""
-    return compact_log(
-        spark,
-        f"{index_path}/sat",
-        up_to_batch,
-        lambda live: live.agg(*_sat_sums()),
-    )
-
-
-def reset_saturation(spark: SparkSession, index_path: str) -> None:
-    """Drop the saturation log after a bounds refit (old rows were
-    measured against the old bounds)."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/sat")
-    if fs.exists(p) and not fs.delete(p, True):
-        raise RuntimeError(f"could not remove {index_path}/sat")
-    invalidate_watermark_cache(f"{index_path}/sat")

@@ -29,14 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .batchlog import attach_batch_sink, path_exists
+
 BUCKET_COL = "__bucket"
-
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
 
 
 def latest_per_key(df: DataFrame, key_col: str, order_cols: list[str]) -> DataFrame:
@@ -60,11 +55,10 @@ def upsert_batch(
     """Merge one (micro-)batch into the bucketed parquet target.
     Usable directly for batch backfills and as the foreachBatch body."""
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     fresh = latest_per_key(batch_df, key_col, order_cols).withColumn(
         BUCKET_COL, F.pmod(F.hash(key_col), F.lit(num_buckets))
     )
-    if _target_exists(spark, path):
+    if path_exists(spark, path):
         touched = [
             r[0] for r in fresh.select(BUCKET_COL).distinct().collect()
         ]  # <= num_buckets ids: metadata-sized by construction
@@ -74,7 +68,9 @@ def upsert_batch(
         merged = latest_per_key(existing.unionByName(fresh), key_col, order_cols)
     else:
         merged = fresh
-    merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(BUCKET_COL).parquet(path)
 
 
 def streaming_upsert(
@@ -88,17 +84,11 @@ def streaming_upsert(
     """Attach the upsert sink to a stream; returns the StreamingQuery.
     Append-mode source rows flow through foreachBatch, so arbitrary
     batch DataFrame logic (the bucket merge) runs per micro-batch."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_batch(batch_df, path, key_col, order_cols, num_buckets)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        (),
+        lambda df, _: upsert_batch(df, path, key_col, order_cols, num_buckets),
     )
 
 

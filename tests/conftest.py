@@ -127,12 +127,20 @@ SLOW_TESTS = {
 
 def pytest_collection_modifyitems(config, items):
     matched = set()
+    files = set()
     for item in items:
         key = item.nodeid.split("/")[-1]
+        files.add(key.split("::")[0])
         if key in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
             matched.add(key)
-    stale = SLOW_TESTS - matched
+    # a partial run collects only some files (or only the node ids
+    # named on the command line): an entry is stale only when its whole
+    # file was collected and the test was not in it
+    picked = {a.split("::")[0].split("/")[-1] for a in config.args if "::" in a}
+    stale = {
+        t for t in SLOW_TESTS - matched if t.split("::")[0] in files - picked
+    }
     if stale and not config.option.collectonly:
         import warnings
 

@@ -32,6 +32,21 @@ def test_traced_action_records_span(spark, sf_small):
     assert spans[-1].duration_ms > 0
 
 
+def test_span_sink_keeps_only_the_newest_spans():
+    from mapreduce_task_spark.obs import tracing
+
+    clear_recorded_spans()
+    n = tracing.MAX_RECORDED_SPANS + 5
+    for i in range(n):
+        with tracing.span("bounded", {"i": i}):
+            pass
+    spans = get_recorded_spans()
+    assert len(spans) == tracing.MAX_RECORDED_SPANS
+    assert spans[0].attributes["i"] == 5
+    assert spans[-1].attributes["i"] == n - 1
+    clear_recorded_spans()
+
+
 def test_observe_counters(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     obs = Observation("c")

@@ -197,3 +197,31 @@ def test_bloom_filter_write_adds_filter_bytes_losslessly(spark, sf_small):
     finally:
         shutil.rmtree(d_plain, ignore_errors=True)
         shutil.rmtree(d_bloom, ignore_errors=True)
+
+
+def test_static_write_after_batchlog_append_replaces_dataset(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option, not a session
+    conf: after a batchlog append, ``write_partitioned(dynamic=False)``
+    still replaces the whole dataset, and the session conf is
+    unchanged."""
+    from mapreduce_task_spark.streaming.batchlog import write_batch_partition
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        write_batch_partition(spark.range(3), 0, str(tmp_path / "log"))
+        d = str(tmp_path / "part")
+        write_partitioned(
+            spark.createDataFrame([(0, 1), (1, 2)], ["k", "v"]), d, ["k"]
+        )
+        write_partitioned(
+            spark.createDataFrame([(0, 3)], ["k", "v"]), d, ["k"], dynamic=False
+        )
+        assert sorted(x for x in os.listdir(d) if x.startswith("k=")) == ["k=0"]
+        assert [(r["k"], r["v"]) for r in spark.read.parquet(d).collect()] == [
+            (0, 3)
+        ]
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)

@@ -62,3 +62,56 @@ def test_tiny_pin_restores_confs_on_compile_failure(spark):
         pass
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert spark.conf.get("spark.sql.shuffle.partitions") == sp_before
+
+
+def test_tiny_pin_non_numeric_partitions_falls_back(spark, monkeypatch):
+    """A non-numeric partition override must not leave the session
+    de-AQE'd: the pin falls back to the plain lazy pin with every conf
+    untouched."""
+    from mapreduce_task_spark.operators import pinning
+
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
+    sp_before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(pinning, "_TINY_PARTITIONS", "eight")
+    pinned = lazy_checkpoint_tiny(_small_agg(spark))
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == sp_before
+    assert sorted(pinned.collect()) == sorted(_small_agg(spark).collect())
+
+
+def test_tiny_pin_concurrent_callers_restore_confs(spark):
+    """Threads pinning at once (a streaming foreachBatch beside a
+    retrain) must not restore each other's clamped confs: the
+    mutate/compile/restore window is serialized."""
+    import sys
+    import threading
+
+    before = (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+    errors = []
+
+    def work():
+        try:
+            for _ in range(3):
+                lazy_checkpoint_tiny(_small_agg(spark))
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    ) == before

@@ -2388,6 +2388,46 @@ def test_composed_crawl_batch_replay_idempotent(spark, sf_small, tmp_path):
     assert state() == want
 
 
+def test_crawl_ivfpq_leg_reads_shape_from_index_meta(spark, sf_small, tmp_path):
+    """The composed sink's IVF-PQ leg takes m/dim/per_list from the
+    index meta: on a per_list=True index, crawl_batch with no shape
+    arguments lands exactly the delta (and drift) rows
+    ivfpq_ingest.append_batch writes when told per_list=True."""
+    from mapreduce_task_spark.operators.pq import ivfpq_build_index
+    from mapreduce_task_spark.streaming.crawl import crawl_batch
+    from mapreduce_task_spark.streaming.dedup_ingest import read_corpus
+    from mapreduce_task_spark.streaming.ivfpq_ingest import append_batch
+
+    full = _crawl_corpus(spark, sf_small)
+    base = full.filter(F.col("doc_id") < 250).where(F.col("embedding").isNotNull())
+    batch = full.filter((F.col("doc_id") >= 250) & (F.col("doc_id") < 380))
+    idx = str(tmp_path / "ivfpq_pl")
+    ivfpq_build_index(
+        base, idx, id_col="doc_id", n_clusters=4, m=8, ksub=16, dim=64,
+        coarse_rounds=1, pq_rounds=2, per_list=True,
+    )
+    corpus = str(tmp_path / "corpus")
+    crawl_batch(batch, 0, corpus, str(tmp_path / "sigs"), ivfpq_path=idx)
+
+    survivors = batch.join(read_corpus(spark, corpus).select("doc_id"), "doc_id")
+    append_batch(
+        survivors.where(F.col("embedding").isNotNull()), 1, idx,
+        id_col="doc_id", m=8, dim=64, per_list=True,
+    )
+
+    def rows(log, bid):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(f"{idx}/{log}")
+            .filter(F.col("__batch") == bid)
+            .drop("__batch")
+            .collect()
+        )
+
+    assert rows("delta", 0) and rows("delta", 0) == rows("delta", 1)
+    assert rows("drift", 0) == rows("drift", 1)
+
+
 def test_compact_crawl_preserves_every_surface(spark, sf_small, tmp_path):
     """One maintenance call folds all six crawl logs; corpus, lexical
     search, ANN search, and monitor totals are bit-identical before
